@@ -107,9 +107,17 @@ def _stream_shuffle_partitions(spark: SparkSession):
     sets it to its throughput, e.g. 1000+, exactly as it would have set
     ``spark.sql.shuffle.partitions`` before). Restores the session value
     after the stream finishes."""
-    n = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
+    raw = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n <= 0:
+        raise ValueError(
+            "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be a positive "
+            f"integer, got {raw!r}")
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
     finally:

@@ -49,6 +49,27 @@ travel, for free). History is bounded by ``vacuum(keep_last=n)`` — an
 out-of-band maintenance call that deletes version dirs only older
 snapshots reference; it never runs inside the commit path, so retained
 readers never race it.
+
+Snapshot memo. Building a parquet relation lists every path it is given,
+and above ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32
+paths) that listing is a distributed Spark job with one task per path —
+paid by every full ``read()`` of a 64-bucket store, i.e. by every lookup.
+A resolved snapshot frame is a pure function of (session, store path,
+manifest publish): version dirs are immutable and the manifest alone
+decides which are live, so each publish (``_publish`` and
+``mark_committed``) stamps the manifest with a fresh random
+``publish_id`` and resolved frames are memoized under (session, path,
+batch id, publish id). A commit,
+or a store deleted and re-created at the same path with the same batch
+ids, writes a new id and can never be served a stale frame; a copied
+store lives at another path. A vacuumed snapshot's archive is gone, so
+``read(as_of=...)`` still fails before the memo is consulted. The memo
+is a small LRU with a fixed cap (each entry pins one file listing on the
+JVM), so a process that reads many stores holds a bounded number.
+``read(buckets=...)`` derives from a memoized snapshot with a partition
+filter (pruned at planning, no listing), but a miss stays path-selected
+and does NOT fill the memo: a pure-ingest stream then lists only its
+touched buckets' dirs per batch, never the whole store.
 """
 
 from __future__ import annotations
@@ -56,13 +77,41 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
+import uuid
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 _VERSION_PREFIX = "__v="
+
+#: Resolved snapshot frames kept by the memo (see the module docstring).
+_SNAPSHOT_CAP = 16
+_snapshots: OrderedDict[tuple, DataFrame] = OrderedDict()
+_snapshots_lock = threading.Lock()
+
+
+def _snapshot_get(key: tuple | None) -> DataFrame | None:
+    if key is None:
+        return None
+    with _snapshots_lock:
+        df = _snapshots.get(key)
+        if df is not None:
+            _snapshots.move_to_end(key)
+        return df
+
+
+def _snapshot_put(key: tuple | None, df: DataFrame) -> None:
+    if key is None:
+        return
+    with _snapshots_lock:
+        _snapshots[key] = df
+        _snapshots.move_to_end(key)
+        while len(_snapshots) > _SNAPSHOT_CAP:
+            _snapshots.popitem(last=False)
 
 
 class BucketedParquetStore:
@@ -155,12 +204,15 @@ class BucketedParquetStore:
              as_of: int | None = None) -> DataFrame:
         """Store contents (including the bucket column), resolved through
         the manifest: only each bucket's live version dir is scanned —
-        stale/orphan versions are invisible. With ``buckets``, pruning is
-        by *path selection* (stronger than a partition filter: unrequested
-        buckets never reach the scan at all). With ``as_of`` (a committed
+        stale/orphan versions are invisible. With ``as_of`` (a committed
         batch id), the archived manifest of that batch resolves instead —
         snapshot reads, free because version dirs are immutable; bounded
-        by ``vacuum``."""
+        by ``vacuum``. Full snapshots are memoized per manifest publish
+        (module docstring), so repeat reads of an unchanged store list
+        nothing. With ``buckets``, only those buckets are scanned: by a
+        partition filter over the memoized snapshot when there is one
+        (pruned at planning), else by *path selection* (unrequested buckets
+        never reach the scan at all)."""
         if as_of is None:
             manifest = self._manifest()
         else:
@@ -169,13 +221,33 @@ class BucketedParquetStore:
                 raise ValueError(
                     f"no snapshot for batch {as_of}: not committed here or "
                     f"already vacuumed (have {self.versions()})")
+        # No id: the manifest predates the memo, so nothing identifies its
+        # publish. The batch id guards against a writer that rewrites the
+        # manifest without renewing the id.
+        publish_id = manifest.get("publish_id")
+        key = (None if publish_id is None
+               else (self.spark, self.path, manifest["batch_id"], publish_id))
+        snapshot = _snapshot_get(key)
         entries = manifest["buckets"]
-        if buckets is not None:
-            wanted = {str(b) for b in buckets}
-            entries = {
-                e: v for e, v in entries.items()
-                if e.split("=", 1)[1] in wanted
-            }
+        if buckets is None:
+            if snapshot is None:
+                snapshot = self._scan(manifest, entries)
+                _snapshot_put(key, snapshot)
+            return snapshot
+        wanted = {str(b) for b in buckets}
+        entries = {
+            e: v for e, v in entries.items()
+            if e.split("=", 1)[1] in wanted
+        }
+        if snapshot is not None and entries:
+            # Same text match as the path selection: the directory value
+            # is the bucket's string form.
+            return snapshot.where(
+                F.col(self.bucket_col).cast("string").isin(sorted(wanted)))
+        return self._scan(manifest, entries)
+
+    def _scan(self, manifest: dict, entries: dict) -> DataFrame:
+        """A fresh read of exactly the version dirs of ``entries``."""
         paths = [self._version_dir(e, v) for e, v in sorted(entries.items())]
         schema = self._schema(manifest)
         if not paths:
@@ -322,6 +394,7 @@ class BucketedParquetStore:
         """Advance the manifest for a batch that needed no data change."""
         manifest = self._manifest()
         manifest["batch_id"] = batch_id
+        manifest["publish_id"] = uuid.uuid4().hex
         self._write_json(f"manifest-b{batch_id}.json", manifest)
         self._write_json("manifest.json", manifest)
 
@@ -347,6 +420,7 @@ class BucketedParquetStore:
             os.replace(src, dst)
         manifest = self._manifest()
         manifest["batch_id"] = batch_id
+        manifest["publish_id"] = uuid.uuid4().hex
         for entry in entries:
             manifest["buckets"][entry] = batch_id
         for entry in emptied or []:

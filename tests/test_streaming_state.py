@@ -173,3 +173,34 @@ def test_cdc_sink_ledger_and_state_bounded(sink_results):
     _sink_gates(r, N_CHUNKS)
     assert r["store_rows_equal_live_keys"], \
         (r["final_store_rows"], r["expected_live_keys"])
+
+
+@pytest.mark.parametrize("raw", ["0", "-3", "eight", "2.5", ""])
+def test_stream_state_partitions_env_is_validated(spark, monkeypatch, raw):
+    """A bad ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` fails with a message
+    naming it, before the session's shuffle-partition conf is touched."""
+    from hierarchical_graph_db_spark.streaming.ingest import (
+        _stream_shuffle_partitions,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raw)
+    with pytest.raises(ValueError,
+                       match="SPARK_GRAFT_STREAM_STATE_PARTITIONS"):
+        with _stream_shuffle_partitions(spark):
+            pass
+    assert spark.conf.get(key) == before
+
+
+def test_stream_state_partitions_env_sets_and_restores_conf(spark, monkeypatch):
+    from hierarchical_graph_db_spark.streaming.ingest import (
+        _stream_shuffle_partitions,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", " 5 ")
+    with _stream_shuffle_partitions(spark):
+        assert spark.conf.get(key) == "5"
+    assert spark.conf.get(key) == before

@@ -104,3 +104,29 @@ def test_bm25_ranking_invariants(spark, sf_dir):
     scores = [r["score"] for r in out]
     assert all(a >= b for a, b in zip(scores, scores[1:]))
     assert all(s > 0 for s in scores)
+
+
+def test_fastlit_empty_arrays_keep_element_type(spark):
+    """An empty literal array keeps its element type; a bare ``array()``
+    parses to ``array<void>``."""
+    from hierarchical_graph_db_spark.functions.fastlit import (
+        lit_double_array,
+        lit_double_matrix,
+        lit_index_array,
+        lit_int_array,
+        lit_long_array,
+    )
+
+    df = spark.range(1).select(
+        lit_double_array([]).alias("d"),
+        lit_double_matrix([]).alias("m"),
+        lit_long_array([]).alias("l"),
+        lit_int_array([]).alias("i"),
+        lit_index_array([]).alias("x"),
+        lit_long_array([7]).alias("l1"),
+    )
+    assert dict(df.dtypes) == {
+        "d": "array<double>", "m": "array<array<double>>",
+        "l": "array<bigint>", "i": "array<int>", "x": "array<int>",
+        "l1": "array<bigint>"}
+    assert tuple(df.first()) == ([], [], [], [], [], [7])
